@@ -356,6 +356,17 @@ final class ApdbSpark(val spark: SparkSession, val config: ApdbConfig) {
   //     overwrite reached a bucket, because
   //     (desired ∖ ids(new)) ∪ new = desired.
   //
+  // The six appends are independent, so store() runs them as ONE WAVE
+  // of concurrent Spark jobs, together with the merge's read side (the
+  // touched buckets anti-joined with the new versions, checkpointed);
+  // it joins every task before the intent is written. The order the
+  // fence relies on — all appends, then the intent, then the merge
+  // write, then the state checkpoint — is therefore unchanged. The one
+  // piece of shared state the wave's appends mutate, the attempt
+  // marker's scope, is widened under [[attemptScopeLock]], so each
+  // table still records its dirs before its files land and no
+  // concurrent widening is lost.
+  //
   // The fence itself lives in [[VisitPipeline.visit]] (it owns the
   // visit-state checkpoint and the retry decision); store() only
   // provides the primitives and the ordering. Retry exactness also
@@ -365,10 +376,12 @@ final class ApdbSpark(val spark: SparkSession, val config: ApdbConfig) {
   // harmless (intents only steer a retry of the SAME visitTime) and
   // the next pipeline visit clears stale ones.
 
-  /** Test seam: runs after each store() phase ("objects", "sources",
-    * "fsources", "mirrors", "intent", "merge") so a spec can kill the
+  /** Test seam: runs after each store() phase so a spec can kill the
     * store at every protocol-relevant instant deterministically (the
-    * compactCrashHook pattern). No-op in production. */
+    * compactCrashHook pattern). "objects", "sources" and "fsources" run
+    * inside that table's wave task right after its append (on a wave
+    * thread, while the other tasks may still run); "mirrors" after the
+    * wave joins; then "intent" and "merge". No-op in production. */
   private[apdb] var storeCrashHook: String => Unit = _ => ()
 
   private[apdb] def visitTag(visitTime: Timestamp): String =
@@ -406,11 +419,15 @@ final class ApdbSpark(val spark: SparkSession, val config: ApdbConfig) {
   private def stagedAppend(df: DataFrame, t: String, partCols: Seq[String],
       tag: String, visitMs: Long): Unit = {
     val staging = s"$W/.stage_$t"
-    graft.EstateFs.deleteRecursive(staging) // debris of a crashed attempt
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partCols: _*).parquet(staging)
+    graft.EstateFs.deleteRecursive(staging) // debris of a killed attempt
     val sp = new org.apache.hadoop.fs.Path(staging)
     val f = hfs(sp)
+    // a failed append drops its staging dir too: the store's other wave
+    // tasks run to completion, and the retry may find no rows to append
+    // to this table again
+    try {
+    df.write.mode(SaveMode.Overwrite)
+      .partitionBy(partCols: _*).parquet(staging)
     val spStr = f.makeQualified(sp).toString
     val moves = scala.collection.mutable
       .ArrayBuffer.empty[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)]
@@ -454,29 +471,35 @@ final class ApdbSpark(val spark: SparkSession, val config: ApdbConfig) {
         case e: java.util.concurrent.ExecutionException => throw e.getCause
       } finally pool.shutdown()
     }
-    f.delete(sp, true): Unit
+    } finally f.delete(sp, true): Unit
   }
 
   /** Union `dirs` (table-relative partition dirs, `"sources/mjd_bucket=681"`)
     * into the visit's attempt-marker scope. No-op when no marker exists
     * (a direct store() caller outside the pipeline has no retry fence
     * to scope). The marker rewrite is atomic, so a reader sees the old
-    * scope or the new one. */
-  private def widenAttemptScope(visitMs: Long, dirs: Seq[String]): Unit = {
-    val p = attemptMarkerPath(visitMs)
-    if (dirs.isEmpty || !graft.EstateFs.exists(p)) return
-    attemptScope(new Timestamp(visitMs)) match {
-      case Some(have) =>
-        val union = (have ++ dirs).distinct
-        graft.EstateFs.writeStringAtomic(p,
-          s"""{"visit_ms":$visitMs,"dirs":[${
-            union.map(d => "\"" + d + "\"").mkString(",")}]}""")
-      case None =>
-        // scope-less marker (pre-scope format or corrupt): leave it —
-        // the scrub's full-walk fallback is the safe superset, and
-        // writing a partial scope here would NARROW it incorrectly
+    * scope or the new one; the read-modify-write holds
+    * [[attemptScopeLock]], because the store wave's appends widen
+    * concurrently and an unserialized union would drop another table's
+    * entries. */
+  private def widenAttemptScope(visitMs: Long, dirs: Seq[String]): Unit =
+    attemptScopeLock.synchronized {
+      val p = attemptMarkerPath(visitMs)
+      if (dirs.isEmpty || !graft.EstateFs.exists(p)) return
+      attemptScope(new Timestamp(visitMs)) match {
+        case Some(have) =>
+          val union = (have ++ dirs).distinct
+          graft.EstateFs.writeStringAtomic(p,
+            s"""{"visit_ms":$visitMs,"dirs":[${
+              union.map(d => "\"" + d + "\"").mkString(",")}]}""")
+        case None =>
+          // scope-less marker (pre-scope format or corrupt): leave it —
+          // the scrub's full-walk fallback is the safe superset, and
+          // writing a partial scope here would NARROW it incorrectly
+      }
     }
-  }
+
+  private val attemptScopeLock = new Object
 
   /** The scrub scope recorded in the visit's attempt marker:
     * Some(entries) when the marker carries a `dirs` array (possibly
@@ -645,7 +668,7 @@ final class ApdbSpark(val spark: SparkSession, val config: ApdbConfig) {
     * redo reconstructs the normal-path invariant directly: bucket B
     * holds, for every object with ≥1 version in B, its LATEST version
     * among B's versions (a later version in another bucket never
-    * rewrites B — the per-bucket upsert [[mergeObjLast]] maintains,
+    * rewrites B — the per-bucket upsert store()'s merge maintains,
     * same as the reference's per-partition primary key).
     * The scan partition-prunes to the touched buckets;
     * every touched bucket has ≥1 version (this visit's), so the dynamic
@@ -677,28 +700,54 @@ final class ApdbSpark(val spark: SparkSession, val config: ApdbConfig) {
     * a bucket as "latest version among the bucket's own versions",
     * which equals this per-bucket upsert by construction but could not
     * reproduce a cross-bucket eviction without replaying every visit's
-    * touched set. */
-  private def mergeObjLast(newVersions: DataFrame, touched: Seq[Long]): Unit = {
-    if (touched.isEmpty) return
-    val existing = readOrEmpty("obj_last", objSchema)
+    * touched set.
+    *
+    * Split in two so the read side runs in store()'s wave beside the
+    * appends (it only reads obj_last, which no append writes):
+    * [[prepareObjLastMerge]] materializes the merged buckets, and
+    * [[writeObjLastMerge]] overwrites them after the intent lands. */
+  private def prepareObjLastMerge(newVersions: DataFrame,
+      touched: Seq[Long]): DataFrame =
+    readOrEmpty("obj_last", objSchema)
       .where(col("pix_bucket").isin(touched: _*))
-    val merged = existing
       .join(newVersions.select(col("diaObjectId"), col("pix_bucket"))
           .distinct(),
         Seq("diaObjectId", "pix_bucket"), "left_anti")
       .unionByName(newVersions)
-      // break lineage: the plan both reads and overwrites obj_last
+      // break lineage: the write step overwrites the buckets this reads
       .localCheckpoint(true)
-    try merged.write.mode(SaveMode.Overwrite)
+
+  private def writeObjLastMerge(merged: DataFrame): Unit =
+    merged.write.mode(SaveMode.Overwrite)
       // per-write dynamic mode: only touched buckets are replaced,
       // without mutating session-wide overwrite semantics
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("pix_bucket").parquet(path("obj_last"))
-    // the write was the only consumer — release the blocks rather
-    // than stranding a touched-bucket-sized set per visit, and release
-    // on the FAILURE path too (a crashed merge must not leak them)
-    finally scala.util.Try(org.apache.spark.sql.GraftColumnBridge
-      .releaseLocalCheckpoint(merged)): Unit
+
+  /** Run `tasks` as one wave of concurrent Spark jobs and return only
+    * when EVERY task has finished, then rethrow the first failure (the
+    * others attached as suppressed). Waiting out the survivors is what
+    * keeps the store's order intact: nothing after the wave, least of
+    * all the merge intent, can start while an append still runs.
+    *
+    * The pool is created per call and its threads are started from the
+    * calling thread, so each inherits the caller's Spark local
+    * properties (job group, description, scheduler pool) — a shared
+    * pool's threads would carry whatever group they were born with. */
+  private def inWave(tasks: Seq[() => Unit]): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.length)
+    try {
+      val futures = tasks.map(t => pool.submit(
+        (() => t()): java.util.concurrent.Callable[Unit]))
+      val failures = futures.flatMap { fu =>
+        try { fu.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
   }
 
   // -- store --------------------------------------------------------------
@@ -708,8 +757,16 @@ final class ApdbSpark(val spark: SparkSession, val config: ApdbConfig) {
     * CDC chunks (all with per-visit file provenance), then merge the
     * latest snapshot LAST behind its intent marker (rewriting only
     * touched pixel buckets via dynamic partition overwrite), apply
-    * retention. The append-then-merge order is load-bearing for the
-    * retry fence — see the retry-exactness block above. */
+    * retention.
+    *
+    * The six appends and the merge's read side are independent of one
+    * another, so they run as ONE WAVE of concurrent Spark jobs (one
+    * thread each, [[inWave]]): a visit's FOV-sized jobs each
+    * fill a fraction of the cores, and run back to back they left most
+    * of them idle. The wave joins every task before anything else
+    * happens; only then do the intent, the merge write and retention
+    * run, in the old order. The append-then-merge order is load-bearing
+    * for the retry fence — see the retry-exactness block above. */
   def store(visitTime: Timestamp, objectsIn: DataFrame, srcsIn: DataFrame,
       fsrcsIn: DataFrame): Unit =
     withWriter { timed("tile_store_time", "all") {
@@ -737,69 +794,80 @@ final class ApdbSpark(val spark: SparkSession, val config: ApdbConfig) {
       .withColumn("validityStart", lit(visitTime)))
       .select(objSchema.fieldNames.map(col): _*)
     val tag = visitTag(visitTime)
+    val visitMs = visitTime.getTime
 
-    // 1. version history append (validity truncation is derived at read)
+    // the canonical version rows feed three wave tasks (the history
+    // append, its chunk mirror, the merge read) — cache them once
     val cached = newVersions.cache()
+    var prepared: Option[DataFrame] = None
     try {
-    timed("insert_time", "DiaObject") {
-      stagedAppend(cached, "objects", Seq("pix_bucket"), tag,
-        visitTime.getTime)
-    }
-    storeCrashHook("objects")
+    // collecting the touched buckets also materializes the cache, so
+    // the wave's three readers of it start from memory
     val touched = cached.select(col("pix_bucket")).distinct()
-      .collect().map(_.getLong(0))
-
-    // 2. fact appends, partitioned by 30-day MJD bucket. Emptiness is
-    //    probed ONCE per input — each isEmpty launches a job over the
-    //    (caller-side, possibly uncheckpointed) prep plan, and the
-    //    append gate, crash-hook gate, and mirror gate all need it.
+      .collect().map(_.getLong(0)).toSeq
+    // emptiness is probed ONCE per input — each isEmpty launches a job
+    // over the (caller-side, possibly uncheckpointed) prep plan, and
+    // both the append and the mirror are gated on it
     val srcsEmpty = srcs.isEmpty
     val fsrcsEmpty = fsrcs.isEmpty
+
+    // 1. THE WAVE. Version history append (validity truncation is
+    //    derived at read); fact appends, partitioned by 30-day MJD
+    //    bucket; CDC chunk mirrors (README replica tables,
+    //    `log2csv.py:105-107`); the merge's read side.
     def withTimeBucket(df: DataFrame): DataFrame =
       withBucket(df).withColumn("mjd_bucket",
         floor(col("midpointMjdTai") / 30.0).cast("long"))
-    if (!srcsEmpty) timed("insert_time", "DiaSource") {
-      stagedAppend(
-        withTimeBucket(srcs).select(srcSchema.fieldNames.map(col): _*),
-        "sources", Seq("mjd_bucket"), tag, visitTime.getTime)
-    }
-    if (!srcsEmpty) storeCrashHook("sources")
-    if (!fsrcsEmpty) timed("insert_time", "DiaForcedSource") {
-      stagedAppend(
-        withTimeBucket(fsrcs).select(fsrcSchema.fieldNames.map(col): _*),
-        "fsources", Seq("mjd_bucket"), tag, visitTime.getTime)
-    }
-    storeCrashHook("fsources")
-
-    // 3. CDC chunk mirror (README replica tables, `log2csv.py:105-107`)
-    def mirror(df: DataFrame, empty: Boolean, t: String, table: String): Unit =
-      if (!empty) timed("insert_time", table) {
-        stagedAppend(df.withColumn("apdb_replica_chunk", lit(chunkId)),
-          t, Seq("apdb_replica_chunk"), tag, visitTime.getTime)
+    def append(table: String, df: DataFrame, t: String,
+        partCols: String*): () => Unit = () =>
+      timed("insert_time", table) {
+        stagedAppend(df, t, partCols, tag, visitMs)
       }
-    // the objects mirror reuses the CACHED canonical version rows (same
-    // diaObject fields, pix_bucket dropped) instead of re-executing the
-    // caller's prep plan — row-identical, one plan execution cheaper
-    mirror(cached.drop("pix_bucket"), cached.isEmpty, "obj_chunks",
-      "DiaObjectChunks")
-    mirror(srcs, srcsEmpty, "src_chunks", "DiaSourceChunks")
-    mirror(fsrcs, fsrcsEmpty, "fsrc_chunks", "DiaForcedSourceChunks")
+    def mirror(table: String, df: DataFrame, t: String): () => Unit =
+      append(table, df.withColumn("apdb_replica_chunk", lit(chunkId)), t,
+        "apdb_replica_chunk")
+    // the three table tasks always run, so their crash seams fire even
+    // when the table has no rows this visit
+    def tableTask(empty: Boolean, task: () => Unit, t: String): () => Unit =
+      () => { if (!empty) task(); storeCrashHook(t) }
+    inWave(Seq(
+      Some(tableTask(false,
+        append("DiaObject", cached, "objects", "pix_bucket"), "objects")),
+      Some(tableTask(srcsEmpty, append("DiaSource",
+        withTimeBucket(srcs).select(srcSchema.fieldNames.map(col): _*),
+        "sources", "mjd_bucket"), "sources")),
+      Some(tableTask(fsrcsEmpty, append("DiaForcedSource",
+        withTimeBucket(fsrcs).select(fsrcSchema.fieldNames.map(col): _*),
+        "fsources", "mjd_bucket"), "fsources")),
+      // the objects mirror reuses the CACHED canonical version rows
+      // (same diaObject fields, pix_bucket dropped) instead of
+      // re-executing the caller's prep plan — row-identical, one plan
+      // execution cheaper; no touched bucket means no version rows
+      Option.when(touched.nonEmpty)(mirror("DiaObjectChunks",
+        cached.drop("pix_bucket"), "obj_chunks")),
+      Option.when(!srcsEmpty)(mirror("DiaSourceChunks", srcs, "src_chunks")),
+      Option.when(!fsrcsEmpty)(
+        mirror("DiaForcedSourceChunks", fsrcs, "fsrc_chunks")),
+      // the merge read. The DiaObjectLast insert_time times the write
+      // alone, as the reference times its insert, so this read shows
+      // only in tile_store_time
+      Option.when(touched.nonEmpty)(() =>
+        prepared = Some(prepareObjLastMerge(cached, touched)))).flatten)
     storeCrashHook("mirrors")
 
-    // 4. snapshot merge LAST, behind its intent marker (the retry
+    // 2. snapshot merge LAST, behind its intent marker (the retry
     //    fence's commit point — see the retry-exactness block): every
     //    append above is complete and exactly-once before the intent
     //    lands, so a retry that finds the intent finishes the commit
     //    instead of re-running the visit
-    graft.EstateFs.writeStringAtomic(intentPath(visitTime.getTime),
-      s"""{"visit_ms":${visitTime.getTime},"buckets":[${touched.mkString(",")}]}""")
+    graft.EstateFs.writeStringAtomic(intentPath(visitMs),
+      s"""{"visit_ms":$visitMs,"buckets":[${touched.mkString(",")}]}""")
     storeCrashHook("intent")
-    if (touched.nonEmpty) timed("insert_time", "DiaObjectLast") {
-      mergeObjLast(cached, touched.toSeq)
-    }
+    prepared.foreach(merged =>
+      timed("insert_time", "DiaObjectLast") { writeObjLastMerge(merged) })
     storeCrashHook("merge")
 
-    // 5. retention: drop expired chunk partitions (T8). Timed as the
+    // 3. retention: drop expired chunk partitions (T8). Timed as the
     //    reference's per-table delete_time (`metrics.md:70-83`) so the
     //    nightly cleanup's cost is visible in the per-visit record.
     if (replicaChunkKeepDays > 0) {
@@ -814,8 +882,15 @@ final class ApdbSpark(val spark: SparkSession, val config: ApdbConfig) {
       }
     }
     // finally: a store that THROWS mid-sequence (executor loss, fault
-    // injection) must not leave the cache entry stranded for the retry
-    } finally { cached.unpersist(): Unit }
+    // injection) must not leave the cache entry or the merged buckets'
+    // blocks stranded for the retry. The merge write is the prepared
+    // frame's only consumer, so its blocks go on success too rather
+    // than stranding a touched-bucket-sized set per visit.
+    } finally {
+      prepared.foreach(merged => scala.util.Try(
+        org.apache.spark.sql.GraftColumnBridge.releaseLocalCheckpoint(merged)))
+      cached.unpersist(): Unit
+    }
     refreshViews()
   } }
 

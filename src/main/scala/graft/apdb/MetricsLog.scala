@@ -69,12 +69,17 @@ final class MetricsLog(dir: String) extends AutoCloseable {
         s"""{"name": "$name", "timestamp": ${"%.3f".formatLocal(java.util.Locale.US, visitTime.getTime / 1000.0)}, """ +
         s""""tags": {"visit": "$visit", "table": "$table", "tile": "0"}, """ +
         s""""values": $values, "source": "ap_proto"}""" + "\n"
-    if (local)
-      Files.writeString(localPath, line, StandardOpenOption.CREATE,
-        StandardOpenOption.APPEND): Unit
-    else synchronized {
-      out.write(line.getBytes("UTF-8"))
-      out.hflush()
+    // one line at a time on BOTH paths: store()'s wave emits its
+    // per-table insert_time timers from concurrent threads, and an
+    // unsynchronized append may interleave two lines' bytes
+    synchronized {
+      if (local)
+        Files.writeString(localPath, line, StandardOpenOption.CREATE,
+          StandardOpenOption.APPEND): Unit
+      else {
+        out.write(line.getBytes("UTF-8"))
+        out.hflush()
+      }
     }
   }
 

@@ -319,9 +319,10 @@ object VisitPipeline {
     val cutoffTs = new Timestamp(visitTime.getTime -
       cfg.forcedCutoffDays.toLong * 86400000L)
     // materialized once like latest/newSources: store() alone executes
-    // the frame four times (two isEmpty probes + the append + the
-    // mirror) and the stats count makes five — an FOV-sized anti-join
-    // re-run five times inside the 45 s budget
+    // the frame three times (one isEmpty probe, then the append and the
+    // mirror as concurrent jobs of its wave) and the stats count makes
+    // four — an FOV-sized anti-join re-run four times inside the 45 s
+    // budget
     val forced = latest
       .join(newSources.select(col("diaObjectId")), Seq("diaObjectId"), "left_anti")
       .where(col("nDiaSources") > 1 &&

@@ -909,13 +909,13 @@ object DedupQueries {
     // (sort + count), and the quadratic pair work below is what the DF
     // cap itself bounds.
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("gram"))
-    // localCheckpoint: THREE consumers (sizes, both self-join sides) —
-    // without it each re-executes the scan→explode→distinct→window
-    // subtree (the before-plan carried 46 Exchanges for this reason).
     val kept = grams
       .withColumn("gram_df", count(lit(1)).over(w))
       .where(col("gram_df") <= MaxGramDf)
       .select(col("doc_id"), col("gram"))
+    // localCheckpoint: THREE consumers (sizes, both self-join sides) —
+    // without it each re-executes the scan→explode→distinct→window
+    // subtree (the before-plan carried 46 Exchanges for this reason).
     // EAGER: a lazy checkpoint was measured (r15) and lost — sibling
     // AQE stages race to materialize the same partitions and duplicate
     // the work; the eager barrier runs the subtree exactly once.

@@ -874,8 +874,12 @@ object PhaseProbe {
         val t = DedupQueries.skewThreshold(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("sig"))
-        val salted = sigs.withColumn("__salts", least(lit(32L),
-          floor((count(lit(1)).over(w) + lit(t - 1)) / lit(t))))
+        // threshold <= 0 disables the salt, as in x71 and bucketSelfJoin:
+        // one shard per sig is the plain sig join
+        val salted = sigs.withColumn("__salts",
+          if (t <= 0) lit(1L)
+          else least(lit(32L),
+            floor((count(lit(1)).over(w) + lit(t - 1)) / lit(t))))
         val n = s.sparkContext.defaultParallelism
         val a = salted
           .withColumn("__shard", (rand(42) * col("__salts")).cast("long"))

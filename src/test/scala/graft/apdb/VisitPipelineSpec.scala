@@ -126,6 +126,50 @@ class VisitPipelineSpec extends AnyFunSuite {
       Schemas.diaForcedSource.fieldNames.toSet)
   }
 
+  test("MetricsLog: concurrent emitters write whole lines (local warehouse)") {
+    // store()'s wave emits its per-table timers from concurrent threads.
+    // Each line here is over 8 KiB, more than one write call of the
+    // local append, so unserialized emitters would interleave bytes
+    val dir = java.nio.file.Files.createTempDirectory("metrics_mt").toString
+    val log = new MetricsLog(dir)
+    val ts = Timestamp.valueOf("2026-01-01 01:00:00")
+    val threads = 8
+    val perThread = 40
+    val keys = 700
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val done = (0 until threads).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            (0 until perThread).foreach { i =>
+              log.record(ts, "wave_probe", t, s"T$t",
+                (0 until keys).map(k => s"k$k" -> (t * 1000 + i).toDouble))
+            }
+          }
+        })
+      }
+      start.countDown()
+      done.foreach(_.get())
+    } finally pool.shutdown()
+    log.close()
+    val parsed = graft.streaming.LogAnalytics.parseMetrics(
+      spark.read.text(s"$dir/metrics.log"))
+    val rows = parsed.select(col("visit"), col("table"), col("values"))
+      .collect()
+    assert(rows.length == threads * perThread,
+      s"${rows.length} whole records read back, expected ${threads * perThread}")
+    rows.foreach { r =>
+      val t = r.getInt(0)
+      assert(r.getString(1) == s"T$t")
+      val vs = r.getMap[String, Double](2)
+      assert(vs.size == keys)
+      assert(vs.values.toSet.size == 1 &&
+        vs.values.head.toInt / 1000 == t, s"record of thread $t torn")
+    }
+  }
+
   test("telemetry loop: pipeline metrics reconstruct the reference CSV") {
     val apdb = freshApdb("telemetry")
     val log = new MetricsLog(apdb.config.warehouseDir)

@@ -132,6 +132,10 @@ class VisitRetrySpec extends AnyFunSuite {
     retryCase("objects", expectRecovered = false)
   }
 
+  test("crash after the sources append: scrub + redo is exactly-once") {
+    retryCase("sources", expectRecovered = false)
+  }
+
   test("crash after the fact appends: scrub + redo is exactly-once") {
     retryCase("fsources", expectRecovered = false)
   }
@@ -466,5 +470,135 @@ class VisitRetrySpec extends AnyFunSuite {
     // and scrub is surgical: visit 1's rows are intact
     assert(apdb.sources.where(col("visit") === 1).count() > 0)
     assert(apdb.sources.where(col("visit") === 2).count() === 0)
+  }
+
+  // -- store wave: the appends and the merge read run as concurrent jobs --
+
+  private def stageDirs(apdb: ApdbSpark): Seq[String] =
+    graft.EstateFs.listNames(apdb.config.warehouseDir)
+      .filter(_.startsWith(".stage_"))
+
+  test("a wave task failing while the others still run: the wave waits, the retry is exactly-once") {
+    // the objects task throws while the sources task is provably still
+    // running (held in its hook until the throw). store() must wait for
+    // the survivor before it rethrows — nothing may land after the
+    // failure surfaces — and the retry must converge to the clean state
+    val apdb = freshApdb("wave_fail")
+    val ts = VisitPipeline.visitTimes(
+      Timestamp.valueOf("2026-01-01 01:00:00"), 3)
+    VisitPipeline.visit(apdb, catalog, ts(0)._1, ts(0)._2, pointing)
+    val thrown = new java.util.concurrent.CountDownLatch(1)
+    @volatile var sourcesDone = false
+    @volatile var sourcesSawThrow = false
+    apdb.storeCrashHook = {
+      case "objects" =>
+        thrown.countDown()
+        throw new RuntimeException("boom:objects")
+      case "sources" =>
+        sourcesSawThrow =
+          thrown.await(120, java.util.concurrent.TimeUnit.SECONDS)
+        Thread.sleep(200) // still running well after the failure
+        sourcesDone = true
+      case _ =>
+    }
+    val failed = intercept[RuntimeException] {
+      VisitPipeline.visit(apdb, catalog, ts(1)._1, ts(1)._2, pointing)
+    }
+    apdb.storeCrashHook = _ => ()
+    assert(failed.getMessage == "boom:objects")
+    assert(sourcesSawThrow, "the sources task finished before objects threw")
+    assert(sourcesDone, "store() rethrew before every wave task finished")
+    assert(apdb.mergeIntent(ts(1)._2).isEmpty,
+      "the intent was written although a wave task failed")
+    assert(stageDirs(apdb).isEmpty, s"staging debris: ${stageDirs(apdb)}")
+    VisitPipeline.visit(apdb, catalog, ts(1)._1, ts(1)._2, pointing)
+    VisitPipeline.visit(apdb, catalog, ts(2)._1, ts(2)._2, pointing)
+    assert(stateHash(apdb) === clean._1,
+      "warehouse diverged after a mid-wave failure + retry")
+    assert(stageDirs(apdb).isEmpty, s"staging debris: ${stageDirs(apdb)}")
+  }
+
+  test("the wave's concurrent appends lose no attempt-scope entry") {
+    // the scrub walks only the dirs the attempt marker lists, so every
+    // partition dir holding one of the visit's tagged files must be
+    // listed — six appends widen the marker concurrently, and an
+    // unserialized read-modify-write would drop some of their entries
+    val apdb = freshApdb("wave_scope")
+    val ts = VisitPipeline.visitTimes(
+      Timestamp.valueOf("2026-01-01 01:00:00"), 2)
+    VisitPipeline.visit(apdb, catalog, ts(0)._1, ts(0)._2, pointing)
+    val (v2, ts2) = ts(1)
+    apdb.storeCrashHook =
+      p => if (p == "mirrors") throw new RuntimeException("boom:mirrors")
+    intercept[RuntimeException] {
+      VisitPipeline.visit(apdb, catalog, v2, ts2, pointing)
+    }
+    apdb.storeCrashHook = _ => ()
+    val scope = apdb.attemptScope(ts2)
+      .getOrElse(fail("attempt marker lost its scope")).toSet
+    val wh = new java.io.File(apdb.config.warehouseDir).getCanonicalFile
+    val tag = apdb.visitTag(ts2)
+    def taggedDirs(f: java.io.File): Seq[String] =
+      Option(f.listFiles()).toSeq.flatten.flatMap { c =>
+        if (c.isDirectory) taggedDirs(c)
+        else if (c.getName.startsWith(tag))
+          Seq(wh.toPath.relativize(f.toPath).toString)
+        else Nil
+      }
+    val holding = apdb.appendTables
+      .flatMap(t => taggedDirs(new java.io.File(wh, t))).distinct
+    // every table with rows this visit (visit 2 has no forced sources)
+    val tables = holding.map(_.takeWhile(_ != '/')).toSet
+    assert(tables == Set("objects", "sources", "obj_chunks", "src_chunks"),
+      s"fixture: the visit's appends left tagged files in $tables")
+    val missing = holding.filterNot(scope.contains)
+    assert(missing.isEmpty, s"tagged dirs outside the attempt scope: $missing")
+  }
+
+  test("wave jobs keep the caller's Spark local properties (job group)") {
+    // the wave's threads are created per store() call from the calling
+    // thread, so they inherit its job group; a shared pool's threads
+    // would carry a stale group and misattribute the jobs
+    val apdb = freshApdb("wave_group")
+    val ts = VisitPipeline.visitTimes(
+      Timestamp.valueOf("2026-01-01 01:00:00"), 2)
+    VisitPipeline.visit(apdb, catalog, ts(0)._1, ts(0)._2, pointing)
+    val sc = spark.sparkContext
+    val group = s"store-wave-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((Option(j.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull,
+          j.stageInfos.map(_.details).mkString("\n")))
+    }
+    val caller = Thread.currentThread()
+    val hookSaw = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, String)]
+    apdb.storeCrashHook = p =>
+      if (Set("objects", "sources", "fsources")(p))
+        hookSaw.add((Thread.currentThread() ne caller,
+          sc.getLocalProperty("spark.jobGroup.id")))
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "store wave probe", interruptOnCancel = false)
+    try {
+      VisitPipeline.visit(apdb, catalog, ts(1)._1, ts(1)._2, pointing)
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      apdb.storeCrashHook = _ => ()
+    }
+    import scala.jdk.CollectionConverters._
+    // every job whose call site is inside the engine's store
+    val storeJobs = jobs.asScala.toSeq.filter(_._2.contains("graft.apdb.ApdbSpark"))
+    assert(storeJobs.exists(_._2.contains("ThreadPoolExecutor")),
+      "no store() job ran on a wave thread")
+    val strays = storeJobs.filterNot(_._1 == group)
+    assert(strays.isEmpty, s"${strays.size} of ${storeJobs.size} store() " +
+      s"jobs lost the caller's job group: ${strays.map(_._1)}")
+    assert(hookSaw.size == 3 && hookSaw.asScala.forall(_ == (true, group)),
+      s"wave tasks ran off-group or on the caller thread: $hookSaw")
   }
 }
