@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Fixed CPU-reference loop (single-threaded integer work, no JIT
@@ -97,19 +96,7 @@ object Bench {
         f"/${calibrationPar}%.3f s vs record band " +
         band.map { case (s, p) => s"[${s(0)},${s(1)}]/[${p(0)},${p(1)}]" }.getOrElse("?") +
         " — stamping degraded_host:true and using min-of-3 per key")
-    val spark = MasterConf(SparkSession.builder(), s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing: without parallelismFirst=false, AQE refuses to
-      // coalesce below the core count, so tiny-row keys pay 32-partition
-      // shuffle overhead (VERDICT r2 #5). Sub-64MB post-shuffle stages
-      // collapse to few partitions; big stages are untouched.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MasterConf.session(cpus)
     // warm up codegen/JIT + the file index of every table so the first
     // timed query doesn't absorb one-time session costs
     try {

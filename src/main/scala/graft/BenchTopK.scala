@@ -90,9 +90,7 @@ object BenchTopK {
     Seq.fill(3)(once()).min
   }
 
-  /** Builds the scaled tables under `outDir` and returns outDir.
-    * Public so ad-hoc probe sessions (spark-shell -I) can build a
-    * persistent scaled dir for paired PhaseProbe measurements. */
+  /** Builds the scaled tables under `outDir` and returns outDir. */
   def buildScaled(spark: SparkSession, sfDir: String,
       outDir: String, mult: Int): String = {
     import spark.implicits._
@@ -156,15 +154,7 @@ object BenchTopK {
     val mult = sys.env.getOrElse("SPARK_GRAFT_BENCH_TOPK_SF", "10").toInt
     require(mult >= 1, s"SPARK_GRAFT_BENCH_TOPK_SF must be >= 1, got $mult")
     val calibration = calibrate()
-    val spark = MasterConf(SparkSession.builder(), s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MasterConf.session(cpus)
 
     val selected =
       if (args.isEmpty) topKeys

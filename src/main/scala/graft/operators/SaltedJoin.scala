@@ -63,20 +63,13 @@ object SaltedJoin {
   def adaptive(skewed: DataFrame, replicated: DataFrame, keys: Seq[String],
       threshold: Long, maxSalts: Int = 32,
       joinType: String = "inner",
-      pinWidth: Option[Int] = None): DataFrame = {
+      pin: (DataFrame, Seq[String]) => DataFrame = (df, _) => df): DataFrame = {
     requireLeftPreserving(joinType)
     val (sLeft, sRight) =
       adaptiveSides(skewed, replicated, keys, threshold, maxSalts)
     val jk = keys :+ "__shard"
-    // see selfAdaptive: pinned-width join exchange for measurably-small
-    // inputs whose join output fans out past what AQE's byte-based
-    // coalescing prices
-    val (jl, jr) = pinWidth match {
-      case Some(n) => (sLeft.repartition(n, jk.map(col): _*),
-        sRight.repartition(n, jk.map(col): _*))
-      case None => (sLeft, sRight)
-    }
-    jl.join(jr, jk, joinType).drop("__shard")
+    // see selfAdaptive: `pin` may fix the join exchange's width
+    pin(sLeft, jk).join(pin(sRight, jk), jk, joinType).drop("__shard")
   }
 
   /** SELF-join variant of [[adaptive]]: both inputs MUST be projections
@@ -92,23 +85,17 @@ object SaltedJoin {
     * broadcast-attach form, whose AQE stage chain dominates. */
   def selfAdaptive(a: DataFrame, b: DataFrame, keys: Seq[String],
       threshold: Long, maxSalts: Int = 32,
-      pinWidth: Option[Int] = None): DataFrame = {
+      pin: (DataFrame, Seq[String]) => DataFrame = (df, _) => df): DataFrame = {
     val (sl, sr) = selfAdaptiveSides(a, b, keys, threshold, maxSalts)
     val jk = keys :+ "__shard"
-    // optional pinned-width join exchange (r16): an explicit
-    // user-specified repartition on exactly the join keys replaces the
-    // join's own exchange (same partitioning, so no extra shuffle) and
-    // is exempt from AQE coalescing — which prices the exchange by its
-    // INPUT bytes and otherwise collapses the parallelism under
-    // candidate joins whose OUTPUT fans out quadratically per bucket.
-    // Callers pass it only when the input is measurably small (the
-    // regime where coalescing misprices); None keeps the r15 plan.
-    val (jl, jr) = pinWidth match {
-      case Some(n) => (sl.repartition(n, jk.map(col): _*),
-        sr.repartition(n, jk.map(col): _*))
-      case None => (sl, sr)
-    }
-    jl.join(jr, jk, "inner").drop("__shard")
+    // optional pinned-width join exchange (r16): `pin` gets each side
+    // and exactly the join keys, so an explicit repartition there
+    // replaces the join's own exchange (same partitioning, no extra
+    // shuffle) and is exempt from AQE coalescing — which prices the
+    // exchange by its INPUT bytes and otherwise collapses the
+    // parallelism under candidate joins whose OUTPUT fans out
+    // quadratically per bucket. The default keeps the r15 plan.
+    pin(sl, jk).join(pin(sr, jk), jk, "inner").drop("__shard")
   }
 
   /** The two sharded sides of [[selfAdaptive]], `__shard` still

@@ -178,10 +178,10 @@ object DedupQueries {
     // byte-based coalescing of the (tiny) input exchange would run the
     // pair formation on a couple of cores; at estate scale the gate is
     // false and the r15 plan is untouched
-    val pin = if (Tables.scanUnderfillsCores(a))
-      Some(spark.sparkContext.defaultParallelism) else None
+    val small = Tables.scanUnderfillsCores(a)
     if (t <= 0) a.join(b, keys)
-    else SaltedJoin.selfAdaptive(a, b, keys, t, pinWidth = pin)
+    else SaltedJoin.selfAdaptive(a, b, keys, t,
+      pin = (df, k) => Tables.pinWidth(small, df, k: _*))
   }
 
   /** Two-sided bucket join with the same guard, hot buckets counted on
@@ -190,10 +190,10 @@ object DedupQueries {
   private[graft] def bucketJoin(spark: SparkSession, skewed: DataFrame,
       small: DataFrame, keys: Seq[String]): DataFrame = {
     val t = skewThreshold(spark)
-    val pin = if (Tables.scanUnderfillsCores(skewed))
-      Some(spark.sparkContext.defaultParallelism) else None
+    val pinned = Tables.scanUnderfillsCores(skewed)
     if (t <= 0) skewed.join(small, keys)
-    else SaltedJoin.adaptive(skewed, small, keys, t, pinWidth = pin)
+    else SaltedJoin.adaptive(skewed, small, keys, t,
+      pin = (df, k) => Tables.pinWidth(pinned, df, k: _*))
   }
 
   /** Signature-agreement fraction (64 codegen'd equality terms). */
@@ -202,19 +202,6 @@ object DedupQueries {
       .map(i => when(a(i) === b(i), 1).otherwise(0))
       .reduce((x: Column, y: Column) => x + y) / lit(SigSize.toDouble)
 
-
-  /** Explicit-width exchange before a near-unique-key aggregate (r16b,
-    * the x83 finding, guide §2.5): when group keys are nearly unique the
-    * partial aggregate combines almost nothing, so AQE prices the final
-    * aggregate's exchange at its full payload and then coalesces it to
-    * a few fat tasks. Pinning the width keeps the final aggregate as
-    * wide as the cores; the caller gates on measured relation stats so
-    * estate-scale plans are untouched. */
-  private def pinWide(small: Boolean, df: DataFrame, keys: String*): DataFrame =
-    if (small)
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-        keys.map(col): _*)
-    else df
 
   val x2DedupMinhash: QFn = (s, d) => {
     // localCheckpoint (GC-managed) instead of cache: query functions
@@ -233,7 +220,7 @@ object DedupQueries {
     // cliques collide in ALL 16 bands, so the post-attach filter pays
     // the 64-term array math on ~16x the rows the dedup-first shape
     // attaches. The ids-only dedup exchange stays.
-    val cand = pinWide(small, bucketSelfJoin(s, a, b, Seq("bh"))
+    val cand = Tables.pinWidth(small, bucketSelfJoin(s, a, b, Seq("bh"))
       .where(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b")), "doc_a", "doc_b")
       .dropDuplicates("doc_a", "doc_b")
@@ -357,12 +344,10 @@ object DedupQueries {
       // pinned-width join exchange for measurably-small inputs (r16,
       // same gate as bucketSelfJoin): the candidate join's output fans
       // out per bucket past what AQE's byte-based coalescing prices
-      val (jl, jr) = if (Tables.scanUnderfillsCores(banded)) {
-        val n = s.sparkContext.defaultParallelism
-        val jk = Seq(col("bh"), col("__shard"))
-        (oldSide.repartition(n, jk: _*), newSide.repartition(n, jk: _*))
-      } else (oldSide, newSide)
-      jl.join(jr, Seq("bh", "__shard"))
+      val small = Tables.scanUnderfillsCores(banded)
+      Tables.pinWidth(small, oldSide, "bh", "__shard")
+        .join(Tables.pinWidth(small, newSide, "bh", "__shard"),
+          Seq("bh", "__shard"))
     })
       .select(col("doc_new"), col("doc_old"))
       .dropDuplicates("doc_new", "doc_old")
@@ -634,7 +619,7 @@ object DedupQueries {
     // keeps the measured r15 plan.
     val candObs = org.apache.spark.sql.Observation(
       s"x58_cand_${obsEpoch.incrementAndGet()}")
-    val cand = pinWide(small, bucketSelfJoin(s, ba, bb, Seq("bh"))
+    val cand = Tables.pinWidth(small, bucketSelfJoin(s, ba, bb, Seq("bh"))
       .where(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b")), "doc_a", "doc_b")
       .dropDuplicates("doc_a", "doc_b")
@@ -642,7 +627,9 @@ object DedupQueries {
       .localCheckpoint(true)
     // ≤ 2M pairs ⇒ ≤ 4M distinct ids ≈ 32 MB of longs — comfortably
     // broadcastable; above that the planner decides (AQE can still
-    // pick broadcast from the measured post-distinct size)
+    // pick broadcast from the measured post-distinct size). The count
+    // is over HASHED candidates, a superset that includes 64-bit
+    // collision pairs, so the gate can only switch the broadcast off sooner.
     val candBroadcastable =
       candObs.get("n").asInstanceOf[Long] <= 2000000L
     val candDocs0 = cand.select(col("doc_a").as("doc_id"))
@@ -665,14 +652,14 @@ object DedupQueries {
       // paid the full-corpus distinct first, then threw most of it
       // away). The broadcast hint is count-gated above (ADVICE r15).
       .join(candDocs, Seq("doc_id"), "leftsemi")
-      .transform(df => pinWide(small, df, "doc_id", "h"))
+      .transform(df => Tables.pinWidth(small, df, "doc_id", "h"))
       .distinct()
       // three consumers (sizes, both intersection attaches) — without
       // the checkpoint each re-runs the tokenize→explode→distinct
       // subtree (the x61 multi-consumer rule, applied here r15)
       .localCheckpoint(true)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = pinWide(small, cand
+    val inter = Tables.pinWidth(small, cand
       .join(sh.select(col("doc_id").as("doc_a"), col("h")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("h")), Seq("doc_b", "h")),
         "doc_a", "doc_b")
@@ -863,10 +850,8 @@ object DedupQueries {
     * (doc_a, doc_b, n_inter, na, nb, jaccard) for every candidate pair
     * sharing ≥ 1 DF-capped gram. x7 cuts it on Jaccard, x79 on
     * containment. */
-  /** The DF-capped kept-grams frame (doc_id, gram), eagerly
-    * checkpointed — extracted from [[x7Scored]] so probe harnesses can
-    * time the construction in isolation; each call builds a fresh
-    * checkpoint exactly as before. */
+  /** The DF-capped kept-grams frame (doc_id, gram) of [[x7Scored]],
+    * eagerly checkpointed; each call builds a fresh checkpoint. */
   private[graft] def x7KeptGrams(s: SparkSession, d: String): DataFrame =
     x7KeptGrams(s, d, materialize = true)
 
@@ -897,10 +882,8 @@ object DedupQueries {
     // stages to a few fat tasks (the x83 finding; kept construction
     // measured 2.7 → 1.1 s at ×10). Estate-scale inputs keep the r15
     // distinct→window shape untouched.
-    val grams = (if (Tables.scanUnderfillsCores(docs))
-        grams0.repartition(s.sparkContext.defaultParallelism, col("gram"))
-      else grams0)
-      .distinct()
+    val grams = Tables.pinWidth(Tables.scanUnderfillsCores(docs), grams0,
+      "gram").distinct()
     // DF cap as ONE window over gram instead of a count aggregate joined
     // back (guide §2.4: two operations keyed the same way share one
     // exchange — the window count and the filter ride a single
@@ -937,9 +920,7 @@ object DedupQueries {
     // fans out ≤ MaxGramDf× per gram while AQE coalesces the exchange
     // by its (small) input bytes; ReuseExchange dedups the identical
     // pinned exchange across the two sides
-    val keptJ = if (Tables.scanUnderfillsCores(docs))
-      kept.repartition(s.sparkContext.defaultParallelism, col("gram"))
-    else kept
+    val keptJ = Tables.pinWidth(Tables.scanUnderfillsCores(docs), kept, "gram")
     // NOTE (r16b, measured negative result — do not retry): pinning the
     // intersection aggregate's width (the x83 uv pin) measured flat on
     // x7 and WORSE on its compositions (x52 3.5 → 4.4 at ×10) — the
@@ -1561,10 +1542,10 @@ object DedupQueries {
     // exchange width + group in-task when the input is measurably
     // small (AQE would coalesce the tiny exchange under the quadratic
     // loop); keep groupByKey's one-group-per-task memory bound at scale
-    val pairs = if (Tables.scanUnderfillsCores(Tables.embeddings(s, d))) {
-      replicated
-        .toDF("key", "role", "id", "ef", "sn")
-        .repartition(s.sparkContext.defaultParallelism, col("key"))
+    val pinned = Tables.scanUnderfillsCores(Tables.embeddings(s, d))
+    val pairs = if (pinned) {
+      Tables.pinWidth(pinned, replicated.toDF("key", "role", "id", "ef", "sn"),
+          "key")
         .as[(Int, Int, Long, Array[Float], Double)]
         .mapPartitions { it =>
           val groups = scala.collection.mutable.HashMap.empty[Int,
@@ -1765,8 +1746,7 @@ object DedupQueries {
   private[graft] def cellPairScan(s: SparkSession,
       emb: org.apache.spark.sql.DataFrame,
       k: Int = IvfClusters,
-      threshold: Double = 0.4,
-      pinSmall: Boolean = true): org.apache.spark.sql.DataFrame = {
+      threshold: Double = 0.4): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val (cs, _) = kmeansFitDf(s, emb, k)
     val cb = s.sparkContext.broadcast(cs)
@@ -1811,17 +1791,16 @@ object DedupQueries {
     // coalescing collapses it to a couple of partitions — and the
     // QUADRATIC pair loop above it then runs on a couple of cores (the
     // same mispricing x83's pair aggregate hit). When the input is
-    // measurably small the exchange is pinned at defaultParallelism
-    // (explicit width, exempt from coalescing) and groups are collected
+    // measurably small the exchange is pinned ([[Tables.pinWidth]]:
+    // explicit width, exempt from coalescing) and groups are collected
     // in-task — memory stays trivially bounded by the tiny input. At
     // estate scale the gate is false and the original groupByKey path
     // runs: one group per task, memory bounded by two blocks, exactly
     // the r15 shape. Both paths call the same pair loop.
-    val pinned = pinSmall && Tables.scanUnderfillsCores(emb)
+    val pinned = Tables.scanUnderfillsCores(emb)
     if (pinned) {
-      replicated
-        .toDF("key", "role", "id", "ef", "sn")
-        .repartition(s.sparkContext.defaultParallelism, col("key"))
+      Tables.pinWidth(pinned, replicated.toDF("key", "role", "id", "ef", "sn"),
+          "key")
         .as[((Int, Int), Int, Long, Array[Float], Double)]
         .mapPartitions { it =>
           val groups = scala.collection.mutable.HashMap.empty[(Int, Int),
@@ -2432,7 +2411,7 @@ object DedupQueries {
     * caller applies the global rank-≤k window. */
   private[graft] def knnBlockScored(s: SparkSession,
       emb: org.apache.spark.sql.Dataset[(Long, Array[Double], Long)],
-      k: Int, pinSmall: Boolean = true): org.apache.spark.sql.DataFrame = {
+      k: Int): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val bCount = KnnBlocks
     val replicated = emb.flatMap { case (id, e, n) =>
@@ -2445,10 +2424,10 @@ object DedupQueries {
     // same grouping-mechanism gate as cellPairScan (r16): pin the
     // exchange width + group in-task when the input is measurably
     // small; keep groupByKey's one-group-per-task bound at scale
-    val scored = if (pinSmall && Tables.scanUnderfillsCores(emb.toDF())) {
-      replicated
-        .toDF("key", "role", "id", "e", "n")
-        .repartition(s.sparkContext.defaultParallelism, col("key"))
+    val pinned = Tables.scanUnderfillsCores(emb.toDF())
+    val scored = if (pinned) {
+      Tables.pinWidth(pinned, replicated.toDF("key", "role", "id", "e", "n"),
+          "key")
         .as[(Int, Int, Long, Array[Double], Long)]
         .mapPartitions { it =>
           val groups = scala.collection.mutable.HashMap.empty[Int,
@@ -3249,10 +3228,7 @@ object DedupQueries {
     // exchange is width-pinned on measurably-small inputs (the same
     // AQE-coalescing rule as everywhere else this round). Probe at the
     // ×10 bench: the grams→kept segment fell 7.0 → (see notes).
-    val gramsW = if (Tables.scanUnderfillsCores(docs))
-      grams.repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col("h"))
-    else grams
+    val gramsW = Tables.pinWidth(Tables.scanUnderfillsCores(docs), grams, "h")
     val wOrd = Window.partitionBy(col("h")).orderBy(col("doc_id"), col("pos"))
     val wAll = Window.partitionBy(col("h")).orderBy(col("doc_id"), col("pos"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -3272,10 +3248,7 @@ object DedupQueries {
     // out per shared anchor while AQE coalesces the exchange by its
     // (small) input bytes; ReuseExchange dedups the identical pinned
     // exchange across the two sides
-    val kept = if (Tables.scanUnderfillsCores(docs))
-      kept0.repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col("h"))
-    else kept0
+    val kept = Tables.pinWidth(Tables.scanUnderfillsCores(docs), kept0, "h")
     val m = kept.as("ga")
       .join(kept.as("gb"), col("ga.h") === col("gb.h") &&
         col("ga.doc_id") < col("gb.doc_id"))

@@ -99,10 +99,9 @@ object MiningQueries {
     // ALSO re-probed (r16b): x71's shared-window salt guard WITH the
     // r16b pins — 10.3 vs 9.7 s paired at ×10, still no win now that
     // the refine is cheap; selfAdaptive's per-side windows stay.
-    (if (Tables.scanUnderfillsCores(names))
-       refined.repartition(s.sparkContext.defaultParallelism,
-         col("id_a"), col("id_b"))
-     else refined)
+    // NOTE: + an eager checkpoint of the shared-window frame: 2.10–2.59 vs 2.20–2.79 s, a wash (sf0.1, 4 vCPUs).
+    Tables.pinWidth(Tables.scanUnderfillsCores(names), refined,
+        "id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -746,11 +745,11 @@ object MiningQueries {
     // unordered pair once (i < j ⇔ u < v) in the same codegen stage.
     // Order groups are small by schema, so slice-per-position is
     // linear-ish per order and never quadratic in a vertex's degree.
-    // pin the okey exchange at defaultParallelism when the input is
-    // small (r16, guide §2.5): AQE's byte-based coalescing prices the
-    // exchange by its INPUT bytes and collapsed the partition count
-    // under the exploding pair stage above it (the part sets fan out
-    // ~8× into pair rows) — measured 14.7 → 7.1 s on the ×10 bench.
+    // pin the okey exchange width when the input is small (r16, guide
+    // §2.5): AQE's byte-based coalescing prices the exchange by its
+    // INPUT bytes and collapsed the partition count under the exploding
+    // pair stage above it (the part sets fan out ~8× into pair rows) —
+    // measured 14.7 → 7.1 s on the ×10 bench.
     // The explicit-width repartition is reused by the groupBy (same
     // key), so no extra exchange exists below it; large inputs skip
     // the pin and keep their natural parallelism.
@@ -760,22 +759,9 @@ object MiningQueries {
     // relation stats, no job): false at estate scale, so both pins
     // below vanish and the r15 plan shape is untouched
     val smallScan = Tables.scanUnderfillsCores(pairsIn)
-    val parts = (if (smallScan)
-        pairsIn.repartition(s.sparkContext.defaultParallelism, col("okey"))
-      else pairsIn)
+    val parts = Tables.pinWidth(smallScan, pairsIn, "okey")
       .groupBy(col("okey"))
       .agg(sort_array(collect_set(col("part"))).as("ps"))
-    // pin the SUPPORT aggregate's width too (r16b, guide §2.5): the
-    // pair keys are ~99.7% unique, so the partial aggregate combines
-    // nothing and AQE prices the final agg's exchange at its full ~12 M
-    //-row payload — then coalesces it to a few fat tasks (measured ×10:
-    // edges 8.0 → 2.3 s with the explicit-width uv exchange; the
-    // partial/final pair fuses into the stage behind it)
-    def pinAgg(df: org.apache.spark.sql.DataFrame, keys: Seq[String]) =
-      if (smallScan)
-        df.repartition(s.sparkContext.defaultParallelism,
-          keys.map(col): _*)
-      else df
     def pairStream(p: org.apache.spark.sql.DataFrame) = p
       .select(col("ps"), posexplode(col("ps")))
       .select(col("col").as("u"),
@@ -801,11 +787,17 @@ object MiningQueries {
     // with >2^32 keys.
     val obs = org.apache.spark.sql.Observation(
       s"x83_keys_${x83ObsEpoch.incrementAndGet()}")
-    val packed = pinAgg(pairStream(parts.observe(obs,
+    // pin the SUPPORT aggregate's width too (r16b, guide §2.5): the
+    // pair keys are ~99.7% unique, so the partial aggregate combines
+    // nothing and AQE prices the final agg's exchange at its full ~12 M
+    //-row payload — then coalesces it to a few fat tasks (measured ×10:
+    // edges 8.0 → 2.3 s with the explicit-width uv exchange; the
+    // partial/final pair fuses into the stage behind it)
+    val packed = Tables.pinWidth(smallScan, pairStream(parts.observe(obs,
         min(element_at(col("ps"), 1)).as("mn"),
         max(element_at(col("ps"), -1)).as("mx")))
       .select((shiftleft(col("u").cast("long"), 32)
-        .bitwiseOR(col("v").cast("long"))).as("uv")), Seq("uv"))
+        .bitwiseOR(col("v").cast("long"))).as("uv")), "uv")
       .groupBy(col("uv")).agg(count(lit(1)).as("support"))
       .where(col("support") >= TriMinSupport)
       .select(shiftright(col("uv"), 32).as("u"),
@@ -820,12 +812,12 @@ object MiningQueries {
     val keysFit32 = om("mn") == null ||
       (om("mn").asInstanceOf[Long] >= 0L &&
         om("mx").asInstanceOf[Long] < 4294967296L)
-    val edges = if (keysFit32) packed else pinAgg(pairStream(parts),
-        Seq("u", "v"))
-      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
-      .where(col("support") >= TriMinSupport)
-      .select(col("u"), col("v"))
-      .localCheckpoint(true)
+    val edges = if (keysFit32) packed
+      else Tables.pinWidth(smallScan, pairStream(parts), "u", "v")
+        .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
+        .where(col("support") >= TriMinSupport)
+        .select(col("u"), col("v"))
+        .localCheckpoint(true)
     val deg = edges.select(col("u").as("n"))
       .unionAll(edges.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))

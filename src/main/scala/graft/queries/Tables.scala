@@ -69,21 +69,31 @@ object Tables {
     bytes * 4 < BigInt(n * maxSplit)
   }
 
-  /** Spread a SMALL scan across the cores before heavy per-row work:
-    * an explicit hash repartition on `key` at defaultParallelism —
-    * deterministic (no round-robin/rand), reusable by any downstream
-    * groupBy/window on the same key (guide §2.4: operations keyed the
-    * same way share one exchange), and — because the partition count is
-    * user-specified — exempt from AQE's byte-based coalescing, which
+  /** Explicit-width hash repartition on `keys` when `small` (the
+    * caller's [[scanUnderfillsCores]] reading), else `df` unchanged —
+    * the one place that picks the pinned width. A user-specified
+    * partition count is exempt from AQE's byte-based coalescing, which
     * prices an exchange by its INPUT bytes and so collapses the
-    * parallelism under exploding stages (the measured x83 failure:
-    * 64 MB of part sets fan out ~8× into pair rows on 1–2 tasks).
-    * Large relations (the 100 TB case) keep their natural split
-    * parallelism: this is a no-op for them, so nothing here tunes FOR
-    * the local bench — it only stops tiny inputs from serializing the
-    * whole engine onto one core. */
-  private[graft] def spreadSmallScan(df: DataFrame, key: String): DataFrame =
-    if (scanUnderfillsCores(df))
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
+    * parallelism under exploding stages (candidate joins, pair
+    * generators) and under near-unique-key final aggregates, whose
+    * partial aggregate combines almost nothing (the x83 finding, guide
+    * §2.5). The same-key groupBy/window/join above reuses the exchange
+    * (guide §2.4). At estate scale the gate is false and the plan is
+    * untouched. */
+  private[graft] def pinWidth(small: Boolean, df: DataFrame,
+      keys: String*): DataFrame =
+    if (small)
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+        keys.map(col): _*)
     else df
+
+  /** Spread a SMALL scan across the cores before heavy per-row work
+    * (the measured x83 failure: 64 MB of part sets fan out ~8× into
+    * pair rows on 1–2 tasks). Hashing on `key` is deterministic (no
+    * round-robin/rand). Large relations (the 100 TB case) keep their
+    * natural split parallelism: nothing here tunes FOR the local bench
+    * — it only stops tiny inputs from serializing the whole engine onto
+    * one core. */
+  private[graft] def spreadSmallScan(df: DataFrame, key: String): DataFrame =
+    pinWidth(scanUnderfillsCores(df), df, key)
 }

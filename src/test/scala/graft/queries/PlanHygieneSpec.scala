@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-hygiene guard over the whole query registry: no query may plan
@@ -221,5 +222,40 @@ class PlanHygieneSpec extends AnyFunSuite {
         s"$name shuffled ${written.get()} records (budget $budget) — " +
           "top-k selection no longer partition-bounded?")
     }
+  }
+
+  private def pins(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical
+          .RepartitionByExpression => r
+    }
+
+  test("width pin, small branch: an explicit-width exchange on the keys") {
+    val df = Tables.documents(spark, sf).select(col("doc_id").as("k"))
+    // every test SF takes this branch
+    assert(Tables.scanUnderfillsCores(df))
+    val got = pins(Tables.pinWidth(true, df, "k"))
+    assert(got.size == 1)
+    assert(got.head.optNumPartitions ==
+      Some(spark.sparkContext.defaultParallelism))
+    assert(got.head.partitionExpressions.collect {
+      case a: org.apache.spark.sql.catalyst.expressions.Attribute => a.name
+    } == Seq("k"))
+  }
+
+  test("width pin, estate branch: the gate reads false and the plan is untouched") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    // splits this small make the test table fill the cores many times
+    spark.conf.set(key, "1k")
+    try {
+      val df = Tables.documents(spark, sf)
+      assert(!Tables.scanUnderfillsCores(df))
+      Seq(Tables.pinWidth(Tables.scanUnderfillsCores(df), df, "doc_id"),
+        Tables.spreadSmallScan(df, "doc_id")).foreach { out =>
+        assert(pins(out).isEmpty)
+        assert(out.queryExecution.analyzed == df.queryExecution.analyzed)
+      }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
